@@ -1,9 +1,16 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.Pins._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 
 /**
  * Datalake materialization (SURVEY §2.7 D1/D4/D6): continuous
@@ -57,6 +64,13 @@ object Datalake {
 
   private def metaRoot(outPath: String) = s"$outPath/snapshots"
   private def dataPath(outPath: String) = s"$outPath/data"
+  private def snapDir(outPath: String, snap: Long) =
+    new Path(s"${dataPath(outPath)}/snapshot_id=$snap")
+
+  /** (snapshot_id, committed_at_ms, n_rows) — one row per kept snapshot. */
+  private type SnapshotRow = (Long, Long, Long)
+  private val MetaFile = "snapshots.json"
+  private val Json = new ObjectMapper()
 
   /**
    * Crash-atomic snapshot metadata: the full snapshot set is written as a
@@ -67,53 +81,89 @@ object Datalake {
    * partial dir without `_SUCCESS` that readers skip; a crash before
    * pruning leaves stale versions that are harmless. There is no window
    * in which the table has no valid metadata (the round-2 delete-then-
-   * rename flaw).
+   * rename flaw). Each version is one small JSON-lines file read and
+   * written on the driver through the Hadoop `FileSystem`, like the
+   * reference committer's metadata.json — no Spark job touches metadata.
+   * Returns the latest version number (0 for a fresh table) and its rows.
    */
-  private def latestMetaVersion(spark: SparkSession, outPath: String): Option[(Long, Path)] = {
-    val root = new Path(metaRoot(outPath))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("v=") && fs.exists(new Path(st.getPath, "_SUCCESS")))
-          Some(name.stripPrefix("v=").toLong -> st.getPath)
-        else None
+  private def readMeta(fs: FileSystem, outPath: String): (Long, Seq[SnapshotRow]) =
+    metaVersions(fs, outPath)
+      .filter { case (_, dir) => fs.exists(new Path(dir, "_SUCCESS")) }
+      .maxByOption(_._1)
+      .fold((0L, Seq.empty[SnapshotRow])) { case (v, dir) =>
+        val in = fs.open(new Path(dir, MetaFile))
+        val rows =
+          try new String(in.readAllBytes(), UTF_8).linesIterator.filter(_.nonEmpty).map { line =>
+            val r = Json.readTree(line)
+            (r.get("snapshot_id").asLong, r.get("committed_at_ms").asLong, r.get("n_rows").asLong)
+          }.toVector
+          finally in.close()
+        (v, rows)
       }
-      .sortBy(-_._1).headOption
-  }
 
-  /** Snapshot metadata table: (snapshot_id, committed_at_ms, n_rows). */
-  def snapshots(spark: SparkSession, outPath: String): DataFrame =
-    latestMetaVersion(spark, outPath) match {
-      case Some((_, p)) => spark.read.parquet(p.toString)
-      case None =>
-        import spark.implicits._
-        Seq.empty[(Long, Long, Long)].toDF("snapshot_id", "committed_at_ms", "n_rows")
-    }
-
-  /** Write `rows` as the next metadata version, then prune all but the
-    * newest `KeepMetaVersions` versions (reader-safe in any crash order). */
-  private val KeepMetaVersions = 3
-  private def writeMetaVersion(spark: SparkSession, outPath: String,
-      rows: Seq[(Long, Long, Long)]): Unit = {
-    import spark.implicits._
-    val next = latestMetaVersion(spark, outPath).map(_._1 + 1).getOrElse(1L)
-    val dir = new Path(s"${metaRoot(outPath)}/v=$next")
-    rows.toDF("snapshot_id", "committed_at_ms", "n_rows")
-      .coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new Path(metaRoot(outPath))).toSeq
+  /** Every `snapshots/v=N` directory, committed or not. */
+  private def metaVersions(fs: FileSystem, outPath: String): Seq[(Long, Path)] = {
+    val root = new Path(metaRoot(outPath))
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
       .map(st => st.getPath.getName.stripPrefix("v=").toLong -> st.getPath)
-      .sortBy(-_._1).drop(KeepMetaVersions)
+  }
+
+  /** Write `rows` as metadata version `v` — clearing a crashed writer's
+    * wreck of the same version first, `_SUCCESS` last — then prune all
+    * but the newest `KeepMetaVersions` versions (reader-safe in any crash
+    * order). */
+  private val KeepMetaVersions = 3
+  private def writeMeta(fs: FileSystem, outPath: String, v: Long,
+      rows: Seq[SnapshotRow]): Unit = {
+    val dir = new Path(s"${metaRoot(outPath)}/v=$v")
+    fs.delete(dir, true)
+    val out = fs.create(new Path(dir, MetaFile), false)
+    try out.write(rows.map { case (id, at, n) =>
+      s"""{"snapshot_id":$id,"committed_at_ms":$at,"n_rows":$n}""" + "\n"
+    }.mkString.getBytes(UTF_8))
+    finally out.close()
+    fs.create(new Path(dir, "_SUCCESS"), false).close()
+    metaVersions(fs, outPath).sortBy(-_._1).drop(KeepMetaVersions)
       .foreach { case (_, p) => fs.delete(p, true) }
   }
 
-  private def snapshotRows(spark: SparkSession, outPath: String): Seq[(Long, Long, Long)] =
-    snapshots(spark, outPath).collect().toSeq
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+  /** Snapshot metadata table: (snapshot_id, committed_at_ms, n_rows), a
+    * local relation built on the driver. */
+  def snapshots(spark: SparkSession, outPath: String): DataFrame = {
+    import spark.implicits._
+    readMeta(IcebergFormat.fsOf(spark, outPath), outPath)._2
+      .toDF("snapshot_id", "committed_at_ms", "n_rows")
+  }
+
+  /** (file, partition value, length) of the parquet part files under a
+    * `p_key`-partitioned directory — the file set one write produced. */
+  private[streaming] def listPartFiles(fs: FileSystem, dir: Path): Seq[(Path, String, Long)] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.filter(_.isDirectory).flatMap { pdir =>
+      val pKey = pdir.getPath.getName.stripPrefix("p_key=")
+      fs.listStatus(pdir.getPath).toSeq
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .map(st => (st.getPath, pKey, st.getLen))
+    }
+
+  /** Read one parquet footer on the driver (bounded metadata, no job). */
+  private def withFooter[A](spark: SparkSession, file: Path)(f: ParquetFileReader => A): A = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try f(reader) finally reader.close()
+  }
+
+  /** Parquet footer record count (one footer per written file — the
+    * figure a snapshot's `n_rows` and a manifest's `record_count` carry). */
+  private[streaming] def footerRowCount(spark: SparkSession, file: Path): Long =
+    withFooter(spark, file)(_.getRecordCount)
+
+  /** The Spark schema a Spark-written parquet file records in its footer. */
+  private def footerSchema(spark: SparkSession, file: Path): StructType =
+    withFooter(spark, file)(r => DataType.fromJson(r.getFileMetaData.getKeyValueMetaData
+      .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType])
 
   /**
    * D1/D6 commit: append `df` hour-partitioned under a fresh snapshot id
@@ -122,22 +172,22 @@ object Datalake {
    * Order is data-then-metadata: rows land under the new snapshot id
    * first and only become visible when the metadata version including the
    * id commits — a crash in between leaves invisible orphan files, never
-   * a snapshot pointing at missing data. The row count comes from the
-   * footers of the files this commit just wrote (bounded metadata read),
-   * not from a separate full pass over `df` before the write.
+   * a snapshot pointing at missing data. The data write is the only
+   * Spark work: the row count comes from the footers of the files this
+   * commit just wrote and the metadata is driver-side file I/O.
    */
   def commit(df: DataFrame, tsCol: Column, outPath: String,
       partFn: Column => Column = hourPartition): Long = {
     val spark = df.sparkSession
-    val existing = snapshotRows(spark, outPath)
+    val fs = IcebergFormat.fsOf(spark, outPath)
+    val (version, existing) = readMeta(fs, outPath)
     val snap = existing.map(_._1).maxOption.getOrElse(0L) + 1
     // A crash between the data write and the metadata commit leaves
     // orphan files under this (never-published) snapshot id; a retry
     // reuses the id, so clear any such orphans first — otherwise the
     // appended retry would publish duplicated rows.
-    val fs = new Path(outPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snapDir = new Path(s"${dataPath(outPath)}/snapshot_id=$snap")
-    if (fs.exists(snapDir)) fs.delete(snapDir, true)
+    val dir = snapDir(outPath, snap)
+    if (fs.exists(dir)) fs.delete(dir, true)
     // Cluster rows by target partition before the dynamic-partition
     // write: one task per partition directory instead of every task
     // touching every directory (tasks × dirs tiny files — the classic
@@ -149,9 +199,9 @@ object Datalake {
       .repartition(col("p_key"))
       .write.mode("append").partitionBy("snapshot_id", "p_key")
       .parquet(dataPath(outPath))
-    // Empty input writes no partition directory at all — record n=0.
-    val n = if (fs.exists(snapDir)) spark.read.parquet(snapDir.toString).count() else 0L
-    writeMetaVersion(spark, outPath,
+    // Empty input writes no partition directory at all — n = 0.
+    val n = listPartFiles(fs, dir).map(f => footerRowCount(spark, f._1)).sum
+    writeMeta(fs, outPath, version + 1,
       existing :+ ((snap, System.currentTimeMillis(), n)))
     snap
   }
@@ -162,10 +212,20 @@ object Datalake {
     * a planning-time PartitionFilter that never lists or reads expired
     * -but-not-yet-deleted snapshot directories, where a semi-join would
     * scan every directory's footers first (Iceberg's manifest-list
-    * pruning plays this role in the reference, `manifest_io.cc`). */
+    * pruning plays this role in the reference, `manifest_io.cc`). The
+    * schema is the one recorded in a footer of the newest live snapshot
+    * that holds data, so planning runs no schema-inference job; the
+    * partition columns read back as written, `snapshot_id` long and
+    * `p_key` string. */
   def readTable(spark: SparkSession, outPath: String): DataFrame = {
-    val live = snapshotRows(spark, outPath).map(_._1)
-    spark.read.parquet(dataPath(outPath))
+    val fs = IcebergFormat.fsOf(spark, outPath)
+    val live = readMeta(fs, outPath)._2.map(_._1)
+    val schema = live.sorted.reverseIterator
+      .flatMap(id => listPartFiles(fs, snapDir(outPath, id)).headOption)
+      .nextOption()
+      .map(f => footerSchema(spark, f._1)
+        .add("snapshot_id", LongType).add("p_key", StringType))
+    schema.fold(spark.read)(spark.read.schema).parquet(dataPath(outPath))
       .where(col("snapshot_id").isin(live: _*))
   }
 
@@ -175,19 +235,16 @@ object Datalake {
    * (`expireSnapshots` + deleteWhere semantics).
    */
   def expireSnapshots(spark: SparkSession, outPath: String, keepLast: Int): Seq[Long] = {
-    val all = snapshots(spark, outPath).orderBy(col("snapshot_id").desc).collect()
-    val (keep, expire) = all.splitAt(keepLast)
+    val fs = IcebergFormat.fsOf(spark, outPath)
+    val (version, rows) = readMeta(fs, outPath)
+    val (keep, expire) = rows.sortBy(-_._1).splitAt(keepLast)
     if (expire.nonEmpty) {
-      val fs = new Path(outPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      expire.foreach { r =>
-        fs.delete(new Path(s"${dataPath(outPath)}/snapshot_id=${r.getLong(0)}"), true)
-      }
+      expire.foreach(r => fs.delete(snapDir(outPath, r._1), true))
       // Expiry commits a fresh immutable metadata version holding only
       // the surviving snapshots — same crash-atomic path as commit().
-      val kept = keep.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      writeMetaVersion(spark, outPath, kept)
+      writeMeta(fs, outPath, version + 1, keep)
     }
-    expire.map(_.getLong(0)).toSeq
+    expire.map(_._1)
   }
 
   /**

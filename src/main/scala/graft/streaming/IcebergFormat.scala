@@ -12,6 +12,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import Datalake.{footerRowCount, listPartFiles}
+
 /**
  * Real Iceberg v2 table format, written against the PUBLIC Iceberg table
  * spec (https://iceberg.apache.org/spec/) — no Iceberg runtime jars in
@@ -396,15 +398,6 @@ object IcebergFormat {
 
   // ------------------------------------------------------------- commits
 
-  /** Parquet footer record count (bounded metadata read, one footer per
-    * written file — the figure the manifest's `record_count` carries). */
-  private def footerRowCount(spark: SparkSession, file: Path): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try reader.getRecordCount finally reader.close()
-  }
-
   /**
    * Commit `df` as the next snapshot of an Iceberg v2 table at
    * `table`: data files first, then manifest avro, manifest-list avro,
@@ -523,16 +516,6 @@ object IcebergFormat {
       uuid, priorJson.map(parseExtraRefs).getOrElse(Nil))
     snapId
   }
-
-  /** (file, partition value, length) triples under a partitioned dir. */
-  private def listPartFiles(fs: FileSystem, dir: Path): Seq[(Path, String, Long)] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.filter(_.isDirectory).flatMap { pdir =>
-      val pKey = pdir.getPath.getName.stripPrefix("p_key=")
-      fs.listStatus(pdir.getPath).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(st => (st.getPath, pKey, st.getLen))
-    }
 
   /** Write the ADDED-entries manifest avro for a snapshot; returns
     * (manifest path, byte length, added row count). */
@@ -1582,12 +1565,8 @@ object IcebergFormat {
       e.put("data_file", d)
       e
     }
-    val newFiles = fs.listStatus(snapData).toSeq.filter(_.isDirectory).flatMap { pdir =>
-      val pKey = pdir.getPath.getName.stripPrefix("p_key=")
-      fs.listStatus(pdir.getPath).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(st => mkEntry(1, st.getPath.toString, pKey, st.getLen,
-          footerRowCount(spark, st.getPath)))
+    val newFiles = listPartFiles(fs, snapData).map { case (p, pKey, len) =>
+      mkEntry(1, p.toString, pKey, len, footerRowCount(spark, p))
     }
     val carriedEntries = carried.map { case (p, pKey, bytes, rows) =>
       mkEntry(0, p, pKey, bytes, rows) // status 0 = EXISTING
@@ -1655,35 +1634,9 @@ object IcebergFormat {
     if (fs.exists(snapData)) fs.delete(snapData, true)
     materialized.repartition(col("p_key"))
       .write.mode("overwrite").partitionBy("p_key").parquet(snapData.toString)
-    val entrySchema = ManifestEntrySchema
-    val dataFileSchema = entrySchema.getField("data_file").schema()
-    val entries =
-      if (!fs.exists(snapData)) Seq.empty
-      else fs.listStatus(snapData).toSeq.filter(_.isDirectory).flatMap { pdir =>
-        val pKey = pdir.getPath.getName.stripPrefix("p_key=")
-        fs.listStatus(pdir.getPath).toSeq
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .map { st =>
-            val e = new GenericData.Record(entrySchema)
-            e.put("status", 1)
-            e.put("snapshot_id", snapId)
-            e.put("sequence_number", seq)
-            e.put("file_sequence_number", seq)
-            val part = new GenericData.Record(dataFileSchema.getField("partition").schema())
-            part.put("p_key", pKey)
-            val d = new GenericData.Record(dataFileSchema)
-            d.put("content", 0)
-            d.put("file_path", st.getPath.toString)
-            d.put("file_format", "PARQUET")
-            d.put("partition", part)
-            d.put("record_count", footerRowCount(spark, st.getPath))
-            d.put("file_size_in_bytes", st.getLen)
-            e.put("data_file", d)
-            e
-          }
-      }
-    val manifestPath = new Path(s"${metaDir(table)}/manifest-$snapId.avro")
-    val manifestLen = writeAvro(fs, manifestPath, entrySchema, entries)
+    val files = listPartFiles(fs, snapData)
+    val (manifestPath, manifestLen, addedRows) =
+      writeAddManifest(spark, fs, table, snapId, seq, files)
     val mf = new GenericData.Record(ManifestFileSchema)
     mf.put("manifest_path", manifestPath.toString)
     mf.put("manifest_length", manifestLen)
@@ -1692,11 +1645,10 @@ object IcebergFormat {
     mf.put("sequence_number", seq)
     mf.put("min_sequence_number", seq)
     mf.put("added_snapshot_id", snapId)
-    mf.put("added_files_count", entries.size)
+    mf.put("added_files_count", files.size)
     mf.put("existing_files_count", 0)
     mf.put("deleted_files_count", 0)
-    mf.put("added_rows_count", entries.map(
-      _.get("data_file").asInstanceOf[GenericRecord].get("record_count").asInstanceOf[Long]).sum)
+    mf.put("added_rows_count", addedRows)
     mf.put("existing_rows_count", 0L)
     mf.put("deleted_rows_count", 0L)
     val listPath = new Path(s"${metaDir(table)}/snap-$snapId.avro")

@@ -86,9 +86,12 @@ class NioCheckpointFileManager(base: Path, conf: Configuration)
               Files.deleteIfExists(tmp)
               throw new org.apache.hadoop.fs.FileAlreadyExistsException(
                 s"rename destination already exists: $dst")
-            case _: UnsupportedOperationException =>
+            case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
               // file:-scheme mount without hard links (vfat/FUSE-class):
-              // fall back to check-then-rename — the same (non-atomic)
+              // link(2) fails there with a FileSystemException (EPERM /
+              // EOPNOTSUPP), not UnsupportedOperationException. This case
+              // must stay after FileAlreadyExistsException, its subclass.
+              // Fall back to check-then-rename — the same (non-atomic)
               // existence contract the default manager provides
               if (Files.exists(dst)) {
                 Files.deleteIfExists(tmp)

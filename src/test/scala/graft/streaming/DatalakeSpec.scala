@@ -1,9 +1,13 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import graft.SparkSpec
 
 /** D1/D6 + U2/U4 end-to-end: partitioned commits with snapshot expiry,
@@ -71,6 +75,54 @@ class DatalakeSpec extends SparkSpec {
     Datalake.commit(mkRows(0 until 7), col("timestamp"), out)
     // The retry must publish exactly the 7 committed rows, not 14.
     assert(Datalake.readTable(spark, out).count() === 7)
+  }
+
+  /** Runs `body` under a fresh job group and counts the Spark jobs it
+    * started. The listener bus is asynchronous, so a marker job in a
+    * second group follows the body: once the listener has seen the
+    * marker start, every earlier job start has been delivered too. */
+  private def withJobCount[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"dl-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val markers = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => markers.incrementAndGet()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val a = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      eventually(timeout(30.seconds), interval(20.millis))(assert(markers.get() === 1))
+      (a, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a commit runs only its data write; snapshots and readTable planning run no job") {
+    val out = tmp("dljobs")
+    Datalake.commit(mkRows(0 until 10), col("timestamp"), out)
+    // 20 rows over hours 10..23 and 0..5: the new snapshot spans many p_key dirs
+    val (snap, commitJobs) = withJobCount(
+      Datalake.commit(mkRows(10 until 30), col("timestamp"), out))
+    assert(snap === 2L)
+    val pKeyDirs = new java.io.File(s"$out/data/snapshot_id=$snap").list()
+      .count(_.startsWith("p_key="))
+    assert(pKeyDirs >= 2)
+    assert(commitJobs <= 2, s"commit ran $commitJobs jobs")
+    val (snaps, snapshotJobs) = withJobCount(Datalake.snapshots(spark, out).collect())
+    assert(snapshotJobs === 0)
+    val (table, planJobs) = withJobCount(Datalake.readTable(spark, out))
+    assert(planJobs === 0)
+    val nRows = snaps.find(_.getLong(0) == snap).get.getLong(2)
+    assert(nRows === 20L)
+    assert(nRows === table.where(col("snapshot_id") === snap).count())
   }
 
   test("multiplexer routes rows to per-output hour-partitioned tables") {

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.scalatest.funsuite.AnyFunSuite
@@ -67,9 +69,8 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     val cancelled = m.createAtomic(dst, overwriteIfPossible = true)
     cancelled.write("d".getBytes("UTF-8"))
     cancelled.cancel()
-    val leftovers = Files.list(dir).iterator()
-    var names = List.empty[String]
-    while (leftovers.hasNext) names ::= leftovers.next().getFileName.toString
+    val names = scala.util.Using.resource(Files.list(dir))(
+      _.iterator().asScala.map(_.getFileName.toString).toList)
     assert(names == List("commit-log"), s"unexpected leftovers: $names")
     assert(read(dir.resolve("commit-log")) == "c")
   }
