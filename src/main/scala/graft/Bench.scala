@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,30 +33,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Local-path checkpoint I/O without Hadoop's per-op subprocess forks
-      // (readlink/chmod/ls via Shell) — the NIO manager delegates back to
-      // the default for any non-file: scheme, so nothing changes on a
-      // real cluster. See NioCheckpointFileManager scaladoc.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // The checksum wrapper doubles checkpoint file ops to guard object-
-      // store corruption; a local POSIX fs gives those guarantees itself.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // Local data-plane writes without the per-file chmod fork (and the
-      // .crc sibling files) of Hadoop's default checksummed local FS —
-      // see ForklessLocalFileSystem scaladoc. Only registered in these
-      // local session builders; cluster schemes (hdfs/s3) are untouched.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.streaming.ForklessLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.local(cpus)
     // Optional name filter (comma-separated, for local iteration only —
     // the driver's per-round run sets no filter and times every entry).
     val filter = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -70,7 +50,7 @@ object Bench {
 
     // JVM/codegen warmup so the first measured work doesn't pay JIT tax.
     try spark.range(1000000).selectExpr("sum(id)").collect()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     val reruns = scala.collection.mutable.ArrayBuffer.empty[String]
 
@@ -93,7 +73,7 @@ object Bench {
         SparkEntry.prepareFixtures(spark, sfDir)
         force(SparkEntry.queries.head._2(spark, sfDir))
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
     // Entries whose first shot exceeds this are re-measured once and the
     // min reported: single-shot timing of a 200-entry suite confuses
@@ -112,7 +92,7 @@ object Bench {
     def shot(name: String): Option[Double] = {
       val t0 = System.nanoTime()
       try { force(shots(name)(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable => failed(name) = String.valueOf(e); None }
+      catch { case NonFatal(e) => failed(name) = String.valueOf(e); None }
     }
     def timeEntry(name: String, minOf2: Boolean): Option[Double] =
       shot(name).flatMap { t1 =>
@@ -140,7 +120,8 @@ object Bench {
       else try {
         val root = new com.fasterxml.jackson.databind.ObjectMapper()
           .readTree(java.nio.file.Files.readString(f))
-        if (root.get("_sf") == null || root.get("_sf").asText() != sfDir) Map.empty
+        // floors from another scale or core count are not comparable
+        if (root.path("_sf").asText() != sfDir || root.path("_cpus").asInt() != cpus) Map.empty
         else {
           val b = Map.newBuilder[String, Double]
           root.fields().forEachRemaining { e =>
@@ -149,7 +130,7 @@ object Bench {
           }
           b.result()
         }
-      } catch { case _: Throwable => Map.empty }
+      } catch { case NonFatal(_) => Map.empty }
     }
     val RegressionRatio = 2.0
     val MinRegressionSec = 0.3
@@ -273,7 +254,8 @@ object Bench {
         "  \"_throughput\": " + block
       }
       val body = entries.mkString(
-        "{\n  \"_sf\": \"" + sfDir + "\",\n  \"_total_secs\": " + total +
+        "{\n  \"_sf\": \"" + sfDir + "\",\n  \"_cpus\": " + cpus +
+          ",\n  \"_total_secs\": " + total +
           ",\n  \"_env_health_ratio\": " + envHealthJson +
           ",\n  \"_regressions\": " + regJson +
           ",\n  \"_failed\": " + failedJson +
@@ -289,7 +271,7 @@ object Bench {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(target),
         body.getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => System.err.println(s"[bench] $target not written: $e") }
     }
     spark.stop()
   }
@@ -375,7 +357,7 @@ object Bench {
         force(SparkEntry.fullLog1k(spark, warmDir))
         force(SparkEntry.fullLog1k(spark, warmDir).where(col("offset") >= 0))
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     val (produceRows, produceCold, produceSec) =
       timedBoth("produce")(force(SparkEntry.fullLog(spark, sfDir)))
     val (fetchRows, fetchCold, fetchSec) = timedBoth("fetch")(
@@ -419,7 +401,7 @@ object Bench {
     try {
       runStream(1, warmupDir)
       runStream(1, warmDir)
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     val (streamRows, streamSec) = timed(runStream(StreamLinks, sfDir))
     val thr =
       s""""throughput":{"produce_rows_per_s":${produceRows / produceSec},""" +

@@ -1,28 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object EntryProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Local-path checkpoint I/O without Hadoop's per-op subprocess forks
-      // (readlink/chmod/ls via Shell) — the NIO manager delegates back to
-      // the default for any non-file: scheme, so nothing changes on a
-      // real cluster. See NioCheckpointFileManager scaladoc.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // The checksum wrapper doubles checkpoint file ops to guard object-
-      // store corruption; a local POSIX fs gives those guarantees itself.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // Local data-plane writes without the per-file chmod fork (and the
-      // .crc sibling files) of Hadoop's default checksummed local FS —
-      // see ForklessLocalFileSystem scaladoc. Only registered in these
-      // local session builders; cluster schemes (hdfs/s3) are untouched.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.streaming.ForklessLocalFileSystem")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     for (sf <- args.headOption.map(_.split(",").toSeq).getOrElse(Seq("sf0.001", "sf0.01"));
          name <- args.drop(1)) {
       val df = SparkEntry.queries(name)(spark, s"/root/testdata/$sf")

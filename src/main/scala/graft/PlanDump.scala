@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /**
  * Dump `explain("formatted")` for named entries under the exact Bench
@@ -15,18 +15,10 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(1))
     val suffix = args(2)
     val names = args(3).split(",").map(_.trim).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     java.nio.file.Files.createDirectories(outDir)
     try SparkEntry.prepareFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     for (name <- names) {
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
@@ -35,7 +27,7 @@ object PlanDump {
         java.nio.file.Files.write(outDir.resolve(s"${name}_$suffix.txt"),
           plan.getBytes("UTF-8"))
         println(s"PLANDUMP ok $name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"PLANDUMP FAIL $name: $e")
       }
     }

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /**
  * Two-scale probe in ONE warm JVM: time selected entries at a base SF
@@ -30,17 +29,9 @@ object ScaleProbe {
     val Array(baseDir, probeDir, namesS) = args.take(3)
     val smallDir = args.lift(3)
     val names = namesS.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     try spark.range(1000000).selectExpr("sum(id)").collect()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     // a failed shot returns NaN — the entry then prints an error row
     // instead of a plausible-looking ratio computed from the
@@ -52,7 +43,7 @@ object ScaleProbe {
         Bench.force(SparkEntry.queries(name)(spark, dir))
         (System.nanoTime() - t0) / 1e9
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           println(s"[probe] $name@$dir failed: $e")
           Double.NaN
       }

@@ -1,9 +1,9 @@
 package graft
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Optimization-round profiler: runs named entries under the exact Bench
@@ -21,30 +21,7 @@ object StageProbe {
     val names = args.lift(1).map(_.split(",").map(_.trim).toSeq)
       .getOrElse(Seq.empty)
     val minStageMs = args.lift(2).map(_.toLong).getOrElse(50L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Local-path checkpoint I/O without Hadoop's per-op subprocess forks
-      // (readlink/chmod/ls via Shell) — the NIO manager delegates back to
-      // the default for any non-file: scheme, so nothing changes on a
-      // real cluster. See NioCheckpointFileManager scaladoc.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // The checksum wrapper doubles checkpoint file ops to guard object-
-      // store corruption; a local POSIX fs gives those guarantees itself.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // Local data-plane writes without the per-file chmod fork (and the
-      // .crc sibling files) of Hadoop's default checksummed local FS —
-      // see ForklessLocalFileSystem scaladoc. Only registered in these
-      // local session builders; cluster schemes (hdfs/s3) are untouched.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.streaming.ForklessLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     case class St(name: String, wallMs: Long, taskMs: Long, tasks: Int,
       shufReadMB: Double, shufWriteMB: Double, inputMB: Double, spillMB: Double)
@@ -85,22 +62,22 @@ object StageProbe {
 
     // same warmup as Bench
     try spark.range(1000000).selectExpr("sum(id)").collect()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     try SparkEntry.prepareFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       // shot 1: warm plans/JIT, uncounted
       val tw0 = System.nanoTime()
-      try Bench.force(fn(spark, sfDir)) catch { case e: Throwable => println(s"WARM FAIL $name: $e") }
+      try Bench.force(fn(spark, sfDir)) catch { case NonFatal(e) => println(s"WARM FAIL $name: $e") }
       val warmSec = (System.nanoTime() - tw0) / 1e9
       stages.clear(); jobs.clear(); actions.synchronized(actions.clear())
       spark.catalog.clearCache(); System.gc()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tPlan = (System.nanoTime() - t0) / 1e9
-      try Bench.force(df) catch { case e: Throwable => println(s"FAIL $name: $e") }
+      try Bench.force(df) catch { case NonFatal(e) => println(s"FAIL $name: $e") }
       val total = (System.nanoTime() - t0) / 1e9
       println(f"\n===== $name%s total=$total%.2fs (build=$tPlan%.2fs, warm-shot=$warmSec%.2fs) stages=${stages.size}%d jobs=${jobs.size}%d")
       val agg = stages.sortBy(-_.wallMs)
@@ -123,7 +100,7 @@ object StageProbe {
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         java.nio.file.Files.write(dir.resolve(s"$name.txt"), plan.getBytes("UTF-8"))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     spark.stop()
   }

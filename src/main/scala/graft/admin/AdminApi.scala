@@ -1,6 +1,7 @@
 package graft.admin
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
@@ -2249,7 +2250,7 @@ object AdminApi {
             case Some(p) => p
           }
           val doc = try mapper.readTree(metaJson) catch {
-            case _: Throwable => return err(400, "JSON parse error: metadata header")
+            case NonFatal(_) => return err(400, "JSON parse error: metadata header")
           }
           validateDeployDoc(doc).foreach(m => return err(400, m))
           val off = doc.get("offset")

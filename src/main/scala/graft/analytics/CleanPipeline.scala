@@ -228,34 +228,34 @@ object CleanPipeline {
       .select(col("doc_id"), col("keep").as("__rk"))
     // The bucket table (LM train + two-phase rank lineage) is needed only
     // by the FINAL funnel aggregate, not by the gate/dedup chain — pin it
-    // in an overlapped job (guide §2.6) and join it late, instead of
-    // serializing its materialization in front of the whole chain. The
-    // reorder is row-identical BECAUSE buckets cover every doc with
+    // in an overlapped leg and join it late, instead of serializing its
+    // materialization in front of the whole chain. The reorder is
+    // row-identical BECAUSE buckets cover every doc with
     // exactly one row (perplexityBuckets ranks the full corpus,
     // unscorable docs sink to the tail); a partial-coverage bucket table
     // would change which docs enter the dedup stage, so that coverage is
     // a contract of this function, not an incidental property.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val bkF = Future { buckets.select(col("doc_id"), col("bucket")).pinned() }
-    // The flag table is consumed by THREE actions (the shingle
-    // materialization, the components' edge count, the final funnel
-    // aggregate) — checkpoint it so the rule batteries evaluate once.
-    val flags = base.join(g, "doc_id").join(r, "doc_id")
-      .pinned()
-    // FineWeb dedups AFTER the quality gates: only rule survivors shingle
-    val survivors = flags.where(col("__gk") && col("__rk"))
-      .select(col("doc_id"), col("__text"))
-    val sh = Dedup.shingled(survivors, col("doc_id"), col("__text"), shingleN)
-      .pinned()
-    val cands = Dedup.lshCandidates(
-      Dedup.minHashSignaturesParity(sh, k), k, bands, maxBucket)
-    val pairs = Dedup.verifyJaccard(cands, sh)
-      .where(col("jaccard") >= threshold).select("doc_a", "doc_b")
-    val comp = Dedup.connectedComponents(pairs, survivors.select("doc_id"))
-    val lab = flags.join(comp, Seq("doc_id"), "left")
-      .join(Await.result(bkF, Duration.Inf), "doc_id")
+    val (bk, deduped) = graft.Overlap.both(
+      buckets.select(col("doc_id"), col("bucket")).pinned(),
+      {
+        // The flag table is consumed by THREE actions (the shingle
+        // materialization, the components' edge count, the final funnel
+        // aggregate) — checkpoint it so the rule batteries evaluate once.
+        val flags = base.join(g, "doc_id").join(r, "doc_id")
+          .pinned()
+        // FineWeb dedups AFTER the quality gates: only rule survivors shingle
+        val survivors = flags.where(col("__gk") && col("__rk"))
+          .select(col("doc_id"), col("__text"))
+        val sh = Dedup.shingled(survivors, col("doc_id"), col("__text"), shingleN)
+          .pinned()
+        val cands = Dedup.lshCandidates(
+          Dedup.minHashSignaturesParity(sh, k), k, bands, maxBucket)
+        val pairs = Dedup.verifyJaccard(cands, sh)
+          .where(col("jaccard") >= threshold).select("doc_a", "doc_b")
+        val comp = Dedup.connectedComponents(pairs, survivors.select("doc_id"))
+        flags.join(comp, Seq("doc_id"), "left")
+      })
+    val lab = deduped.join(bk, "doc_id")
     val kept = col("__gk") && col("__rk") && col("cluster_id") === col("doc_id")
     val fin = kept && col("bucket") =!= "tail"
     lab.agg(
@@ -320,7 +320,7 @@ object CleanPipeline {
         // the output write, the accepted-id cut and both state writes read
         // the pin — the old spelling re-READ the written parquet once per
         // state write. Output write and state growth are then independent
-        // jobs over pinned inputs, run overlapped (guide §2.6).
+        // jobs over pinned inputs.
         val ladder = staged.select(col("doc_id"), col("__blocked"), col("__lowq"))
           .join(verdicts0.withColumnRenamed("verdict", "__dv"), Seq("doc_id"), "left")
           .select(col("doc_id"),
@@ -331,14 +331,9 @@ object CleanPipeline {
           .pinned()
         try {
           val accepted = ladder.where(col("verdict") === "new").select("doc_id")
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val outW = Future {
-            ladder.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          }
-          Dedup.growIncrementalState(stateDir, batchId, eligible, batchBands, accepted)
-          Await.result(outW, Duration.Inf)
+          graft.Overlap.both(
+            ladder.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"),
+            Dedup.growIncrementalState(stateDir, batchId, eligible, batchBands, accepted))
         } finally
           // free this micro-batch's pins deterministically even on a failed
           // trigger — a long-running stream must not wait on the

@@ -436,16 +436,10 @@ object Dedup {
     // operator's own persistable artifact (the stream twin reads it
     // from parquet state); in the from-scratch spelling this pins it
     // for the run instead.
-    // the two pins are independent signature pipelines — overlap them
-    // (guide §2.6) instead of materializing corpus then batch in sequence
-    val (corpusBands, batchBands) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val cF = Future { bandTable(corpusSig, k, bands).pinned() }
-      val b = bandTable(batchSig, k, bands).pinned()
-      (Await.result(cF, Duration.Inf), b)
-    }
+    // the two pins are independent signature pipelines
+    val (corpusBands, batchBands) = graft.Overlap.both(
+      bandTable(corpusSig, k, bands).pinned(),
+      bandTable(batchSig, k, bands).pinned())
     judgeAgainstIndex(
       capBuckets(corpusBands, Seq("band_id", "band_hash"), maxBucket),
       batchBands, corpusDocs, batchDocs, shingleN, threshold, maxBucket)
@@ -533,17 +527,12 @@ object Dedup {
     * slice of the two append-only state tables. */
   def initIncrementalState(corpusDocs: DataFrame, stateDir: String,
       sign: DataFrame => DataFrame, k: Int, bands: Int): Unit = {
-    // two independent seed writes — overlap them (guide §2.6)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val bandsW = Future {
+    // two independent seed writes
+    graft.Overlap.both(
       bandTable(sign(corpusDocs), k, bands)
-        .write.mode("overwrite").parquet(s"$stateDir/bands/batch=-1")
-    }
-    corpusDocs.select(col("doc_id"), col("text"))
-      .write.mode("overwrite").parquet(s"$stateDir/docs/batch=-1")
-    Await.result(bandsW, Duration.Inf)
+        .write.mode("overwrite").parquet(s"$stateDir/bands/batch=-1"),
+      corpusDocs.select(col("doc_id"), col("text"))
+        .write.mode("overwrite").parquet(s"$stateDir/docs/batch=-1"))
   }
 
   /**
@@ -594,16 +583,10 @@ object Dedup {
         try {
           val accepted = verdicts.where(col("verdict") === "new").select("doc_id")
           // The output write and the state growth are independent jobs over
-          // pinned inputs — overlap them (guide §2.6) instead of paying the
-          // per-job driver latency three times in sequence per micro-batch.
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val outW = Future {
-            verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          }
-          growIncrementalState(stateDir, batchId, batchDocs, batchBands, accepted)
-          Await.result(outW, Duration.Inf)
+          // pinned inputs.
+          graft.Overlap.both(
+            verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"),
+            growIncrementalState(stateDir, batchId, batchDocs, batchBands, accepted))
         } finally
           // free this micro-batch's pins deterministically even on a failed
           // trigger — a long-running stream must not wait on the
@@ -647,21 +630,15 @@ object Dedup {
 
   /** Admit `acceptedIds` into the standing state as `batch=batchId`
     * partitions (overwrite — idempotent on micro-batch replay). The two
-    * writes are independent jobs over pinned inputs; they run overlapped
-    * so a micro-batch pays the per-job driver latency once, not twice. */
+    * writes are independent jobs over pinned inputs. */
   private[analytics] def growIncrementalState(stateDir: String,
       batchId: Long, batchDocs: DataFrame, batchBands: DataFrame,
       acceptedIds: DataFrame): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val docsW = Future {
+    graft.Overlap.both(
       batchDocs.join(acceptedIds, Seq("doc_id"), "left_semi")
-        .write.mode("overwrite").parquet(s"$stateDir/docs/batch=$batchId")
-    }
-    batchBands.join(acceptedIds, Seq("doc_id"), "left_semi")
-      .write.mode("overwrite").parquet(s"$stateDir/bands/batch=$batchId")
-    Await.result(docsW, Duration.Inf)
+        .write.mode("overwrite").parquet(s"$stateDir/docs/batch=$batchId"),
+      batchBands.join(acceptedIds, Seq("doc_id"), "left_semi")
+        .write.mode("overwrite").parquet(s"$stateDir/bands/batch=$batchId"))
   }
 
   /**

@@ -433,7 +433,7 @@ object PngCodec {
         // the output write and the index growth read the pin — the old
         // spelling re-READ the written parquet to recover the admitted
         // ids. The two writes are then independent jobs over pinned
-        // inputs, run overlapped (guide §2.6).
+        // inputs.
         val verdicts = quality.join(dupOf, Seq("doc_id"), "left")
           .select(col("doc_id"),
             when(!col("keep"), lit("low_quality"))
@@ -443,15 +443,10 @@ object PngCodec {
           .pinned()
         try {
           val admitted = verdicts.where(col("verdict") === "new").select("doc_id")
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val outW = Future {
-            verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          }
-          hashes.join(admitted, "doc_id")
-            .write.mode("overwrite").parquet(s"$stateDir/hashes/batch=$batchId")
-          Await.result(outW, Duration.Inf)
+          graft.Overlap.both(
+            verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"),
+            hashes.join(admitted, "doc_id")
+              .write.mode("overwrite").parquet(s"$stateDir/hashes/batch=$batchId"))
         } finally
           // free this micro-batch's pins deterministically even on a failed
           // trigger — a long-running stream must not wait on the

@@ -260,8 +260,8 @@ object Sft {
         // Pin the verdicts: the judge DAG evaluates ONCE and both the
         // output write and the index growth read the pin — the old
         // spelling re-READ the written parquet to recover admitted ids.
-        // The two writes are then independent jobs over pinned inputs,
-        // run overlapped (guide §2.6); pins freed even on a failed
+        // The two writes are then independent jobs over pinned inputs;
+        // pins freed even on a failed
         // trigger (a long-running stream must not wait on the
         // ContextCleaner on the cluster path).
         val invalid = flags.where(!col("ok")).select(col("conv_id"),
@@ -269,15 +269,10 @@ object Sft {
         val verdicts = judged.unionByName(invalid).pinned()
         try {
           val admitted = verdicts.where(col("verdict") === "new").select("conv_id")
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val outW = Future {
-            verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          }
-          sigs.join(admitted, Seq("conv_id"), "left_semi")
-            .write.mode("overwrite").parquet(s"$stateDir/sigs/batch=$batchId")
-          Await.result(outW, Duration.Inf)
+          graft.Overlap.both(
+            verdicts.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"),
+            sigs.join(admitted, Seq("conv_id"), "left_semi")
+              .write.mode("overwrite").parquet(s"$stateDir/sigs/batch=$batchId"))
         } finally graft.Pins.unpin(turns, flags, sigs, verdicts)
         ()
       }

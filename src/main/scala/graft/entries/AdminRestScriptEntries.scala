@@ -969,56 +969,51 @@ private[graft] object AdminRestScriptEntries {
       val m = new com.fasterxml.jackson.databind.ObjectMapper()
       def j(b: String) = m.readTree(b)
       // The two engine feeds are independent Spark pipelines that both end
-      // in a driver collect — overlap them (guide §2.6) instead of running
-      // the archive walk and the scrub sequentially before the script.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // engine feed 1: tiered-storage manifest rows -> manifest JSON
-      val manByPartF = Future {
-        val localDir = cleanupOnExit(java.nio.file.Files
-          .createTempDirectory("adm_cs_local")).toString
-        val archDir = cleanupOnExit(java.nio.file.Files
-          .createTempDirectory("adm_cs_arch")).toString
-        graft.log.TieredStorage.archive(
-          storedLog(s, dir).where(col("offset") < 200)
-            .withColumn("ts", col("ts").cast("timestamp")),
-          col("ts"), lit("2200-01-01").cast("timestamp"), localDir, archDir)
-          .where(col("tier") === "archive")
-          .collect().map { r =>
-            val p = r.getInt(1)
-            val o = m.createObjectNode()
-            o.put("version", 1); o.put("namespace", "kafka")
-            o.put("topic", "events"); o.put("partition", p)
-            o.put("insync_offset", r.getLong(3))
-            val seg = o.putArray("segments").addObject()
-            seg.put("base_offset", r.getLong(2))
-            seg.put("committed_offset", r.getLong(3))
-            seg.put("size_bytes", 64L * r.getLong(4))
-            p -> m.writeValueAsString(o)
-          }.toMap
-      }
-      // engine feed 2: scrubber anomaly counters per partition
-      val anomByPartF = Future {
-        graft.log.Scrubber.scrub(
-            scrubManifestFx(s, dir).drop("c"),
-            scrubObjectsFx(s, dir), scrubSpilloverFx(s))
-          .groupBy("partition", "anomaly_type").count().collect()
-          .groupBy(_.getInt(0)).map { case (p, rows) =>
-            val by = rows.map(r => r.getString(1) -> r.getLong(2)).toMap
-            p -> Map(
-              "revision_id" -> 1L,
-              "last_complete_scrub_at" -> 1700000000000L,
-              "missing_segments" -> by.getOrElse("missing_segment", 0L),
-              "num_discarded_missing_spillover_manifests" ->
-                by.getOrElse("missing_spillover_manifest", 0L),
-              "num_discarded_metadata_anomalies" ->
-                (by.values.sum - by.getOrElse("missing_segment", 0L) -
-                  by.getOrElse("missing_spillover_manifest", 0L)))
-          }
-      }
-      val manByPart = Await.result(manByPartF, Duration.Inf)
-      val anomByPart = Await.result(anomByPartF, Duration.Inf)
+      // in a driver collect.
+      val (manByPart, anomByPart) = graft.Overlap.both(
+        // engine feed 1: tiered-storage manifest rows -> manifest JSON
+        {
+          val localDir = cleanupOnExit(java.nio.file.Files
+            .createTempDirectory("adm_cs_local")).toString
+          val archDir = cleanupOnExit(java.nio.file.Files
+            .createTempDirectory("adm_cs_arch")).toString
+          graft.log.TieredStorage.archive(
+            storedLog(s, dir).where(col("offset") < 200)
+              .withColumn("ts", col("ts").cast("timestamp")),
+            col("ts"), lit("2200-01-01").cast("timestamp"), localDir, archDir)
+            .where(col("tier") === "archive")
+            .collect().map { r =>
+              val p = r.getInt(1)
+              val o = m.createObjectNode()
+              o.put("version", 1); o.put("namespace", "kafka")
+              o.put("topic", "events"); o.put("partition", p)
+              o.put("insync_offset", r.getLong(3))
+              val seg = o.putArray("segments").addObject()
+              seg.put("base_offset", r.getLong(2))
+              seg.put("committed_offset", r.getLong(3))
+              seg.put("size_bytes", 64L * r.getLong(4))
+              p -> m.writeValueAsString(o)
+            }.toMap
+        },
+        // engine feed 2: scrubber anomaly counters per partition
+        {
+          graft.log.Scrubber.scrub(
+              scrubManifestFx(s, dir).drop("c"),
+              scrubObjectsFx(s, dir), scrubSpilloverFx(s))
+            .groupBy("partition", "anomaly_type").count().collect()
+            .groupBy(_.getInt(0)).map { case (p, rows) =>
+              val by = rows.map(r => r.getString(1) -> r.getLong(2)).toMap
+              p -> Map(
+                "revision_id" -> 1L,
+                "last_complete_scrub_at" -> 1700000000000L,
+                "missing_segments" -> by.getOrElse("missing_segment", 0L),
+                "num_discarded_missing_spillover_manifests" ->
+                  by.getOrElse("missing_spillover_manifest", 0L),
+                "num_discarded_metadata_anomalies" ->
+                  (by.values.sum - by.getOrElse("missing_segment", 0L) -
+                    by.getOrElse("missing_spillover_manifest", 0L)))
+            }
+        })
       // engine feed 3: manual cache trim over the cache-file fixture
       var lastTrim = (0L, 0L)
       val srv = new AdminApi.Server(nodeIds = Seq(0, 1, 2),

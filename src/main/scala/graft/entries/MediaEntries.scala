@@ -171,13 +171,6 @@ private[graft] object MediaEntries {
         .select(col("doc_id")).as[java.lang.Long]
       val out = cleanupOnExit(
         java.nio.file.Files.createTempDirectory("graft_imgs_out")).toString
-      // state seeding and batch staging are independent writes — overlap
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val seedF = Future {
-        PngCodec.initImageState(PngCodec.synthPngMedia(corpusIds), s"$out/state")
-      }
       val b0 = PngCodec.synthMediaWithLaw(
         ids(31, 900000000L), PngCodec.classPixelB).toDF()
       val b1 = PngCodec.synthMediaWithLaw(
@@ -192,8 +185,10 @@ private[graft] object MediaEntries {
           ids(37, 600000000L), PngCodec.darkPixel).toDF())
         .unionByName(graft.analytics.JpegDqt.synthJpegMedia(
           ids(41, 700000000L)).toDF())
-      val inDir = AnalyticsEntries.stageOrderedBatches("graft_imgs", Seq(b0, b1))
-      Await.result(seedF, Duration.Inf)
+      // state seeding and batch staging are independent writes
+      val (_, inDir) = graft.Overlap.both(
+        PngCodec.initImageState(PngCodec.synthPngMedia(corpusIds), s"$out/state"),
+        AnalyticsEntries.stageOrderedBatches("graft_imgs", Seq(b0, b1)))
       val stream = graft.streaming.Transforms.PathInput(
         inDir, b0.schema, maxFilesPerTrigger = Some(1)).stream(s)
       PngCodec.imageFunnelStream(stream, s"$out/state", s"$out/verdicts",

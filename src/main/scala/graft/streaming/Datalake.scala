@@ -283,17 +283,12 @@ object Datalake {
     * — see commit() note. */
   private def writeRouted(routed: DataFrame, basePath: String,
       counts: Map[String, Long]): Seq[(String, Long)] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = counts.keys.toSeq.sorted.map { o =>
-      o -> Future {
-        routed.where(col("_output") === o).drop("_output")
-          .repartition(col("p_key"))
-          .write.mode("append").partitionBy("p_key").parquet(s"$basePath/$o")
-      }
+    graft.Overlap.map(counts.keys.toSeq.sorted) { o =>
+      routed.where(col("_output") === o).drop("_output")
+        .repartition(col("p_key"))
+        .write.mode("append").partitionBy("p_key").parquet(s"$basePath/$o")
+      o -> counts(o)
     }
-    writes.map { case (o, f) => Await.result(f, Duration.Inf); o -> counts(o) }
   }
 
   /** Dead-letter table directory name under the multiplexer base path. */
@@ -351,21 +346,16 @@ object Datalake {
     val counts = allCounts.filter(!_.getBoolean(1))
       .map(r => r.getString(0) -> r.getLong(2)).toMap
     val nDlq = allCounts.filter(_.getBoolean(1)).map(_.getLong(2)).sum
-    // The DLQ append is independent of the valid-path appends — overlap it
-    // with them instead of serializing after (guide §2.6).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // The DLQ append is independent of the valid-path appends.
     try {
-      val dlqW = if (nDlq == 0) None else Some(Future {
-        classified.where(col("error_code").isNotNull).drop("_schema_id")
-          .repartition(col("p_key"))
-          .write.mode("append").partitionBy("p_key").parquet(s"$basePath/$DlqDir")
-      })
-      val main = writeRouted(
-        classified.where(col("error_code").isNull).drop("error_code", "_schema_id"),
-        basePath, counts)
-      dlqW.foreach(Await.result(_, Duration.Inf))
+      val (_, main) = graft.Overlap.both(
+        if (nDlq > 0)
+          classified.where(col("error_code").isNotNull).drop("_schema_id")
+            .repartition(col("p_key"))
+            .write.mode("append").partitionBy("p_key").parquet(s"$basePath/$DlqDir"),
+        writeRouted(
+          classified.where(col("error_code").isNull).drop("error_code", "_schema_id"),
+          basePath, counts))
       if (nDlq > 0) main :+ (DlqDir -> nDlq) else main
     } finally graft.Pins.unpin(classified)
   }

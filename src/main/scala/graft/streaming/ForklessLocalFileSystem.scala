@@ -24,8 +24,7 @@ import org.apache.hadoop.fs.permission.FsPermission
  * sibling `.crc` files double every create/rename against a local POSIX
  * filesystem whose integrity the OS already guarantees (and whose real
  * deployments put the data plane on HDFS/S3, where this class is never
- * registered — `fs.file.impl` is set only in this repo's local session
- * builders).
+ * registered — `fs.file.impl` is set only in [[graft.GraftSession]]).
  */
 class ForklessLocalFileSystem extends RawLocalFileSystem {
 

@@ -7,6 +7,7 @@ import java.nio.file.{DirectoryStream, Files, Paths, StandardCopyOption, Standar
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path, PathFilter, PositionedReadable, Seekable}
@@ -53,6 +54,9 @@ class NioCheckpointFileManager(base: Path, conf: Configuration)
 
   private def nio(p: Path): JPath = Paths.get(p.toUri.getPath)
 
+  /** link(2); a seam so tests can stand in a filesystem without hard links. */
+  private[streaming] def hardLink(dst: JPath, src: JPath): Unit = Files.createLink(dst, src)
+
   override def createAtomic(path: Path,
       overwriteIfPossible: Boolean): CancellableFSDataOutputStream = {
     if (delegate != null) return delegate.createAtomic(path, overwriteIfPossible)
@@ -80,7 +84,7 @@ class NioCheckpointFileManager(base: Path, conf: Configuration)
           // rename(2) always replaces); link(2) is an atomic
           // create-or-EEXIST, so the hard-link publish either commits tmp
           // as dst or fails atomically with no window.
-          try Files.createLink(dst, tmp)
+          try hardLink(dst, tmp)
           catch {
             case _: java.nio.file.FileAlreadyExistsException =>
               Files.deleteIfExists(tmp)
@@ -106,7 +110,7 @@ class NioCheckpointFileManager(base: Path, conf: Configuration)
       override def cancel(): Unit = synchronized {
         if (terminated) return
         terminated = true
-        try underlyingStream.close() catch { case _: Throwable => () }
+        try underlyingStream.close() catch { case NonFatal(_) => () }
         Files.deleteIfExists(tmp)
       }
     }

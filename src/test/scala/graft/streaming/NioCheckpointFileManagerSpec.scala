@@ -19,6 +19,20 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     new NioCheckpointFileManager(
       new Path(s"file:${dir.toAbsolutePath}"), new Configuration())
 
+  /** A manager on a mount without hard links: link(2) fails with EPERM. */
+  private def noLinkMgr(dir: java.nio.file.Path): NioCheckpointFileManager =
+    new NioCheckpointFileManager(
+        new Path(s"file:${dir.toAbsolutePath}"), new Configuration()) {
+      override private[streaming] def hardLink(dst: java.nio.file.Path,
+          src: java.nio.file.Path): Unit =
+        throw new java.nio.file.FileSystemException(
+          dst.toString, src.toString, "Operation not permitted")
+    }
+
+  private def names(dir: java.nio.file.Path): List[String] =
+    scala.util.Using.resource(Files.list(dir))(
+      _.iterator().asScala.map(_.getFileName.toString).toList.sorted)
+
   private def write(m: NioCheckpointFileManager, p: Path, body: String,
       overwrite: Boolean): Unit = {
     val out = m.createAtomic(p, overwriteIfPossible = overwrite)
@@ -69,9 +83,20 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     val cancelled = m.createAtomic(dst, overwriteIfPossible = true)
     cancelled.write("d".getBytes("UTF-8"))
     cancelled.cancel()
-    val names = scala.util.Using.resource(Files.list(dir))(
-      _.iterator().asScala.map(_.getFileName.toString).toList)
-    assert(names == List("commit-log"), s"unexpected leftovers: $names")
+    assert(names(dir) == List("commit-log"), s"unexpected leftovers: ${names(dir)}")
     assert(read(dir.resolve("commit-log")) == "c")
+  }
+
+  test("without hard links, a no-overwrite commit falls back to check-then-move") {
+    val dir = Files.createTempDirectory("nio_ckpt_spec")
+    val m = noLinkMgr(dir)
+    val dst = new Path(s"file:${dir.resolve("batch-2")}")
+    write(m, dst, "winner", overwrite = false)
+    assert(read(dir.resolve("batch-2")) == "winner")
+    intercept[FileAlreadyExistsException] {
+      write(m, dst, "loser", overwrite = false)
+    }
+    assert(read(dir.resolve("batch-2")) == "winner")
+    assert(names(dir) == List("batch-2"), s"unexpected leftovers: ${names(dir)}")
   }
 }
